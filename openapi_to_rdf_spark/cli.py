@@ -1,12 +1,15 @@
 """spark-submit entrypoint.
 
-Two subcommands:
+The two main subcommands (also: validate, stream, query, update):
 
 - ``convert`` — the reference CLI re-expressed (reference main.py:89-145):
   positional YAML files/dirs, --base-namespace, --format {shacl,owl},
   --namespace-prefix, plus Spark-era flags --parallelism and --output-dir.
-  Per-file ✓/✗ summary and exit code 1 on any failure (main.py:79-86), but
-  computed from the distributed status table instead of a driver loop.
+  One Spark stage: the files are packed onto --parallelism tasks by size,
+  and each task reads, converts and writes its files' Turtle in one Python
+  pass (operators.extract.convert_specs_to_turtle). Per-file ✓/✗ summary in
+  input order and exit code 1 on any failure (main.py:79-86), from the
+  status rows the tasks return.
 
 - ``kg`` — the transcript→knowledge-graph pipeline (checkpoint-resumable;
   plans.pipeline). --workdir is the snapshot root: re-running with the same
@@ -172,51 +175,29 @@ def _build_parser() -> argparse.ArgumentParser:
 
 
 def cmd_convert(args) -> int:
-    from .operators.extract import convert_with_status, split_converted
+    from .operators.extract import convert_specs_to_turtle, turtle_path
     from .session import get_spark
-    from .sinks import write_turtle
-    from .sources.specs import spec_paths_df, with_content
+    from .sources.specs import expand_yaml_paths
 
     spark = get_spark(app_name="openapi-to-rdf-convert", cores=args.cores)
-    specs = with_content(spec_paths_df(spark, args.input, args.parallelism))
-
-    # ONE conversion pass per file: triples + status share a cached combined
-    # frame (convert_with_status); the old two-stage path converted twice
-    combined = convert_with_status(specs, base_namespace=args.base_namespace,
-                                   prefix=args.namespace_prefix,
-                                   fmt=args.format).cache()
-    triples, status_df = split_converted(combined)
-    results = write_turtle(triples, args.output_dir).collect()
-    status = status_df.collect()
-    combined.unpersist()
+    status = convert_specs_to_turtle(
+        spark, expand_yaml_paths(args.input), args.output_dir,
+        base_namespace=args.base_namespace, prefix=args.namespace_prefix,
+        fmt=args.format, parallelism=args.parallelism)
 
     ok = [r for r in status if r.status == "ok"]
     bad = [r for r in status if r.status != "ok"]
-
-    # empty graphs still get a (1-byte) output file, like the reference's
-    # unconditional serializer call (shacl_converter.py:945-975)
-    import os as _os
-
-    from .sinks import _SUBDIR, _SUFFIX
-
-    written = {(r.file, r.graph) for r in results}
-    graphs = ["owl"] if args.format == "owl" else ["rdf", "shacl"]
-    for r in ok:
-        stem = r.file.rsplit(".", 1)[0].replace("-", "_")
-        for g in graphs:
-            if (r.file, g) not in written:
-                sub = _SUBDIR.get(g, g)
-                d = _os.path.join(args.output_dir, sub) if sub else args.output_dir
-                _os.makedirs(d, exist_ok=True)
-                with open(_os.path.join(d, f"{stem}{_SUFFIX.get(g, '')}.ttl"),
-                          "w", encoding="utf-8") as fh:
-                    fh.write("\n")
     for r in ok:
         print(f"  ✓ {r.file}: {r.rdf_triples} rdf + {r.shacl_triples} shacl triples")
     for r in bad:
         print(f"  ✗ {r.file}: {r.error}", file=sys.stderr)
+    # every converted file writes all its graphs, empty ones included;
+    # files sharing an output path count once
+    graphs = ("owl",) if args.format == "owl" else ("rdf", "shacl")
+    n_files = len({turtle_path(args.output_dir, r.file, g)
+                   for r in ok for g in graphs})
     print(f"\n{len(ok)} succeeded, {len(bad)} failed; "
-          f"{len(results)} Turtle files → {args.output_dir}")
+          f"{n_files} Turtle files → {args.output_dir}")
     return 1 if bad else 0
 
 
@@ -280,7 +261,10 @@ def cmd_kg(args) -> int:
         from .sources.specs import spec_paths_df, with_content
 
         specs = with_content(spec_paths_df(spark, args.spec))
-        shacl = convert_specs_df(specs).filter(F.col("graph") == "shacl")
+        # materialized once: the rule derivation below reads the shapes
+        # through several joins, and each read would re-run the conversion
+        shacl = (convert_specs_df(specs).filter(F.col("graph") == "shacl")
+                 .localCheckpoint())
         # scalar-alias sh:class rules become datatype-set rules BEFORE
         # namespace alignment, so alias literals aren't flagged as
         # missing class instances

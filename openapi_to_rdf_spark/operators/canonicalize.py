@@ -403,6 +403,17 @@ REMAP_BROADCAST_BYTES = 64 * 1024 * 1024
 _PY_MAP_ROW_OVERHEAD = 48
 
 
+def _map_broadcast_bytes(changed: DataFrame) -> float:
+    """Estimated broadcast footprint of an (ent, canonical) map: rows times
+    the average UTF-8 byte width of both ids plus a per-row overhead. Byte
+    width, not character width: a non-ASCII IRI takes more bytes than
+    characters in the JVM's hash relation."""
+    stats = changed.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.avg(F.octet_length("ent") + F.octet_length("canonical")).alias("w")).first()
+    return stats["n"] * ((stats["w"] or 0.0) + _PY_MAP_ROW_OVERHEAD)
+
+
 def remap_triples(triples: DataFrame, ent_map: DataFrame,
                   ent_prefix: str) -> DataFrame:
     """Rewrite s and (iri-kind) o through the canonical entity map.
@@ -446,11 +457,7 @@ def remap_triples(triples: DataFrame, ent_map: DataFrame,
     # it fits; a pathological map where most of the corpus moved falls
     # back to AQE's own choice rather than OOMing the driver.
     changed = ent_map.filter(F.col("ent") != F.col("canonical")).localCheckpoint()
-    stats = changed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(F.length("ent") + F.length("canonical")).alias("w")).first()
-    est_bytes = stats["n"] * ((stats["w"] or 0.0) + _PY_MAP_ROW_OVERHEAD)
-    if est_bytes <= REMAP_BROADCAST_BYTES:
+    if _map_broadcast_bytes(changed) <= REMAP_BROADCAST_BYTES:
         changed = F.broadcast(changed)
     smap = changed.select(F.col("ent").alias("s"), F.col("canonical").alias("s_canon"))
     omap = changed.select(F.col("ent").alias("o"), F.col("canonical").alias("o_canon"))

@@ -4,8 +4,11 @@ Two extractors share the triple-table schema:
 
 1. ``convert_specs_df`` — the reference converter (convert/shacl.py pure
    function) run inside ``mapInPandas``: one Arrow batch of (path, content)
-   rows in, exploded triples out. Per-file failure isolation lands in a
-   ``status`` sidecar instead of aborting the job (reference main.py:56-77).
+   rows in, exploded triples out. ``convert_specs_to_turtle`` is the
+   ``cli convert`` path: the same per-file conversion (``_spec_converter``),
+   but the Turtle is written where the triples are made and only one status
+   row per file leaves the worker; a failing file becomes an ``error`` row
+   instead of aborting the job (reference main.py:56-77).
 
 2. ``extract_transcript_triples`` — the transcript triple factory
    (BASELINE.json north_star): batched mention detection over conversation
@@ -36,25 +39,13 @@ TRIPLES_SCHEMA = StructType([
 ])
 
 STATUS_SCHEMA = StructType([
+    StructField("path", StringType(), False),
     StructField("file", StringType(), False),
     StructField("status", StringType(), False),  # 'ok' | 'error'
     StructField("error", StringType(), True),
     StructField("rdf_triples", LongType(), False),
     StructField("shacl_triples", LongType(), False),
 ])
-
-# single-pass layout: triple rows and one status row per file share one
-# DataFrame (rec_kind discriminates), so the CLI converts each file ONCE
-# (VERDICT r1 #4 — the separate triples/status stages each re-ran the
-# conversion, 2x waste on the whole fleet path)
-COMBINED_SCHEMA = StructType(
-    [StructField("rec_kind", StringType(), False),   # 'triple' | 'status'
-     StructField("file", StringType(), False)]
-    # triple columns null on status rows and vice versa
-    + [StructField(f.name, f.dataType, True)
-       for f in TRIPLES_SCHEMA.fields if f.name != "file"]
-    + [StructField(f.name, f.dataType, True)
-       for f in STATUS_SCHEMA.fields if f.name != "file"])
 
 
 def _term_to_cols(term: tuple) -> tuple[str, str, str | None]:
@@ -68,18 +59,49 @@ def _subj_to_str(term: tuple) -> str:
     return term[1] if term[0] == "i" else "_:" + term[1]
 
 
+def _spec_converter(base_namespace: str | None = None,
+                    prefix: str | None = None, fmt: str = "shacl"):
+    """The per-file conversion every spec path shares: returns
+    ``convert(fname, content) -> {graph: triple set}`` (graphs 'rdf' and
+    'shacl', or 'owl' alone), raising on a spec the converter rejects.
+
+    Set env SPARK_GRAFT_CONVERT_TRACE to a writable directory to record one
+    line per conversion attempt per worker (test instrumentation for the
+    convert-each-file-once property across executor processes). It is read
+    here, on the driver: already-running worker processes would not see an
+    env var set after session start.
+    """
+    import os
+
+    from ..convert.owl import convert_owl
+    from ..convert.shacl import DEFAULT_PREFIX, convert_shacl
+
+    use_prefix = prefix or DEFAULT_PREFIX
+    trace_dir = os.environ.get("SPARK_GRAFT_CONVERT_TRACE")
+
+    def convert(fname: str, content: str) -> dict[str, set]:
+        if trace_dir:
+            with open(os.path.join(trace_dir, f"{os.getpid()}.log"),
+                      "a", encoding="utf-8") as fh:
+                fh.write(fname + "\n")
+        if fmt == "owl":
+            conv = convert_owl(fname, content, base_namespace or f"{use_prefix}rdf/")
+            return {"owl": conv.g}
+        conv = convert_shacl(fname, content, base_namespace, use_prefix)
+        return {"rdf": conv.rdf, "shacl": conv.sh}
+
+    return convert
+
+
 def convert_specs_df(specs: DataFrame, base_namespace: str | None = None,
                      prefix: str | None = None, fmt: str = "shacl") -> DataFrame:
     """(path, content[, read_error]) -> exploded triple DataFrame.
 
     The conversion itself is the proven pure function; Spark's only job here
-    is partition parallelism + Arrow batching. Output is hash-partitioned by
-    file via the engine's downstream groupBy(file) sinks.
+    is partition parallelism + Arrow batching. Files the converter rejects
+    contribute no rows (``convert_specs_to_turtle`` reports them).
     """
-    from ..convert.shacl import DEFAULT_PREFIX, convert_shacl
-    from ..convert.owl import convert_owl
-
-    use_prefix = prefix or DEFAULT_PREFIX
+    convert = _spec_converter(base_namespace, prefix, fmt)
 
     def run(iterator):
         import pandas as pd
@@ -88,21 +110,14 @@ def convert_specs_df(specs: DataFrame, base_namespace: str | None = None,
         cols = [f.name for f in TRIPLES_SCHEMA.fields]
         for pdf in iterator:
             rows = []
-            for _, rec in pdf.iterrows():
-                path, content = rec["path"], rec["content"]
+            for path, content in zip(pdf["path"], pdf["content"]):
                 if content is None:
                     continue
                 fname = posixpath.basename(path)
                 try:
-                    if fmt == "owl":
-                        conv = convert_owl(fname, content,
-                                           base_namespace or f"{use_prefix}rdf/")
-                        graphs = {"owl": conv.g}
-                    else:
-                        conv = convert_shacl(fname, content, base_namespace, use_prefix)
-                        graphs = {"rdf": conv.rdf, "shacl": conv.sh}
+                    graphs = convert(fname, content)
                 except Exception:
-                    continue  # status stage reports errors
+                    continue
                 for gname, triples in graphs.items():
                     for s, p, o in triples:
                         ok, ov, odt = _term_to_cols(o)
@@ -112,121 +127,84 @@ def convert_specs_df(specs: DataFrame, base_namespace: str | None = None,
     return specs.mapInPandas(run, TRIPLES_SCHEMA)
 
 
-def convert_with_status(specs: DataFrame, base_namespace: str | None = None,
-                        prefix: str | None = None, fmt: str = "shacl") -> DataFrame:
-    """(path, content[, read_error]) -> ONE pass emitting triple rows AND a
-    per-file status row (COMBINED_SCHEMA; filter on rec_kind to split).
+# reference output layout (shacl_converter.py:945-975, rdf_converter.py:381-387):
+# SHACL mode writes rdf/<stem>_rdf.ttl + shacl/<stem>_shacl.ttl, OWL mode <stem>.ttl
+_TURTLE_LAYOUT = {"rdf": ("rdf", "_rdf"), "shacl": ("shacl", "_shacl"),
+                  "owl": ("", "")}
 
-    Callers wanting both outputs MUST persist/cache the result before
-    filtering, or each downstream action re-runs the conversion — exactly
-    the 2x waste this function removes (cli.cmd_convert does this).
 
-    Set env SPARK_GRAFT_CONVERT_TRACE to a writable directory to record one
-    line per converted file per worker (test instrumentation proving the
-    single-pass property across executor processes).
+def _out_stem(fname: str) -> str:
+    return fname.rsplit(".", 1)[0].replace("-", "_")
+
+
+def turtle_path(output_dir: str, fname: str, graph: str) -> str:
+    """Output path of spec ``fname``'s ``graph`` in the reference layout."""
+    import os
+
+    sub, suffix = _TURTLE_LAYOUT[graph]
+    return os.path.join(output_dir, sub, f"{_out_stem(fname)}{suffix}.ttl")
+
+
+def convert_specs_to_turtle(spark, paths: list[str], output_dir: str,
+                            base_namespace: str | None = None,
+                            prefix: str | None = None, fmt: str = "shacl",
+                            parallelism: int | None = None) -> list:
+    """Convert spec files straight to the reference Turtle layout in ONE
+    Spark stage; returns one STATUS_SCHEMA row per path, in ``paths`` order.
+
+    The driver packs the files onto ``n`` groups by size (largest first) and
+    runs ``spark.range(n, numPartitions=n).mapInPandas``: one group per task,
+    JVM-only input, no shuffle. Each task reads, converts, serializes and
+    writes its files in one Python pass, so triples never cross the Python
+    boundary. Every graph of a converted file is written, an empty one as
+    a 1-byte file holding a newline (the reference serializes
+    unconditionally, shacl_converter.py:945-975). Files whose outputs share
+    a path (``a/x.yaml`` and ``b/x.yaml``, or ``TS-x.yaml`` and
+    ``TS_x.yaml``) are written by one task in input order, so the last one
+    wins as in the reference's sequential loop. Unreadable or rejected
+    specs become ``error`` rows (per-file isolation, reference
+    main.py:56-77); a failed output write fails the job.
     """
-    import os as _os
+    import os
 
-    from ..convert.owl import convert_owl
-    from ..convert.shacl import DEFAULT_PREFIX, convert_shacl
+    from ..sources.specs import pack_by_size
+    from ..triplecore.turtle import serialize_turtle
 
-    use_prefix = prefix or DEFAULT_PREFIX
-    # captured at plan-build time (driver): already-running worker processes
-    # would not see an env var set after session start
-    trace_dir = _os.environ.get("SPARK_GRAFT_CONVERT_TRACE")
+    if not paths:
+        raise ValueError("No YAML files found to process.")
+    groups = pack_by_size(paths,
+                          parallelism or spark.sparkContext.defaultParallelism,
+                          key=lambda p: _out_stem(os.path.basename(p)))
+    n = len(groups)
+    convert = _spec_converter(base_namespace, prefix, fmt)
 
-    def run(iterator):
-        import os
-        import pandas as pd
-        import posixpath
-
-        cols = [f.name for f in COMBINED_SCHEMA.fields]
-        n_triple_cols = len(TRIPLES_SCHEMA.fields) - 1  # minus file
-        for pdf in iterator:
-            rows = []
-
-            def status_row(fname, status, error, n_rdf, n_sh):
-                rows.append(("status", fname) + (None,) * n_triple_cols
-                            + (status, error, n_rdf, n_sh))
-
-            for _, rec in pdf.iterrows():
-                path, content = rec["path"], rec["content"]
-                fname = posixpath.basename(path)
-                if content is None:
-                    status_row(fname, "error",
-                               rec.get("read_error") or "unreadable", 0, 0)
-                    continue
-                try:
-                    if fmt == "owl":
-                        conv = convert_owl(fname, content,
-                                           base_namespace or f"{use_prefix}rdf/")
-                        graphs = {"owl": conv.g}
-                        counts = (len(conv.g), 0)
-                    else:
-                        conv = convert_shacl(fname, content, base_namespace, use_prefix)
-                        graphs = {"rdf": conv.rdf, "shacl": conv.sh}
-                        counts = (len(conv.rdf), len(conv.sh))
-                except Exception as e:
-                    status_row(fname, "error", f"{type(e).__name__}: {e}", 0, 0)
-                    continue
-                if trace_dir:
-                    with open(os.path.join(trace_dir, f"{os.getpid()}.log"),
-                              "a", encoding="utf-8") as fh:
-                        fh.write(fname + "\n")
-                for gname, triples in graphs.items():
-                    for s, p, o in triples:
-                        ok, ov, odt = _term_to_cols(o)
-                        rows.append(("triple", fname, gname, _subj_to_str(s),
-                                     p[1], ok, ov, odt, None, None, None, None))
-                status_row(fname, "ok", None, *counts)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return specs.mapInPandas(run, COMBINED_SCHEMA)
-
-
-def split_converted(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """COMBINED_SCHEMA -> (triples DF, status DF) with the classic layouts."""
-    triples = (combined.filter(F.col("rec_kind") == "triple")
-               .select(*[f.name for f in TRIPLES_SCHEMA.fields]))
-    status = (combined.filter(F.col("rec_kind") == "status")
-              .select(*[f.name for f in STATUS_SCHEMA.fields]))
-    return triples, status
-
-
-def convert_status_df(specs: DataFrame, base_namespace: str | None = None,
-                      prefix: str | None = None, fmt: str = "shacl") -> DataFrame:
-    """Per-file ok/error + triple counts (replaces the reference's
-    driver-side success/failure summary and sys.exit). In OWL mode the
-    single graph's count lands in rdf_triples and shacl_triples is 0."""
-    from ..convert.owl import convert_owl
-    from ..convert.shacl import DEFAULT_PREFIX, convert_shacl
-
-    use_prefix = prefix or DEFAULT_PREFIX
+    def convert_file(path: str) -> tuple:
+        fname = os.path.basename(path)
+        try:
+            with open(path, encoding="utf-8") as fh:
+                graphs = convert(fname, fh.read())
+        except Exception as e:  # unreadable or rejected: this file only
+            return (path, fname, "error", f"{type(e).__name__}: {e}", 0, 0)
+        for gname, triples in graphs.items():
+            out_path = turtle_path(output_dir, fname, gname)
+            os.makedirs(os.path.dirname(out_path) or ".", exist_ok=True)
+            with open(out_path, "w", encoding="utf-8") as fh:
+                fh.write(serialize_turtle(triples))
+        # OWL mode's single graph reports as rdf_triples, shacl_triples 0
+        counts = [len(t) for t in graphs.values()] + [0]
+        return (path, fname, "ok", None, counts[0], counts[1])
 
     def run(iterator):
         import pandas as pd
-        import posixpath
 
-        for pdf in iterator:
-            rows = []
-            for _, rec in pdf.iterrows():
-                fname = posixpath.basename(rec["path"])
-                if rec["content"] is None:
-                    rows.append((fname, "error", rec.get("read_error") or "unreadable", 0, 0))
-                    continue
-                try:
-                    if fmt == "owl":
-                        conv = convert_owl(fname, rec["content"],
-                                           base_namespace or f"{use_prefix}rdf/")
-                        rows.append((fname, "ok", None, len(conv.g), 0))
-                    else:
-                        conv = convert_shacl(fname, rec["content"], base_namespace, use_prefix)
-                        rows.append((fname, "ok", None, len(conv.rdf), len(conv.sh)))
-                except Exception as e:
-                    rows.append((fname, "error", f"{type(e).__name__}: {e}", 0, 0))
-            yield pd.DataFrame(rows, columns=[f.name for f in STATUS_SCHEMA.fields])
+        cols = [f.name for f in STATUS_SCHEMA.fields]
+        for batch in iterator:
+            yield pd.DataFrame([convert_file(p) for gid in batch["id"]
+                                for p in groups[gid]], columns=cols)
 
-    return specs.mapInPandas(run, STATUS_SCHEMA)
+    rows = spark.range(n, numPartitions=n).mapInPandas(run, STATUS_SCHEMA).collect()
+    order = {p: i for i, p in enumerate(paths)}
+    return sorted(rows, key=lambda r: order[r.path])
 
 
 # --------------------------------------------------------------------------

@@ -154,6 +154,10 @@ def run_pipeline(spark: SparkSession, workdir: str | pathlib.Path,
     rules = kg_shape_rules(spark, KG_NS)
     rules_fp_part = "base"
     if spec_rules is not None:
+        # materialized once for both the fingerprint collect below and the
+        # violations stage, which would otherwise re-derive the rules (and
+        # re-convert their specs) on every execution
+        spec_rules = spec_rules.localCheckpoint()
         # converted-spec rules may carry newer facet columns (value_class,
         # min/max_inclusive) the hand-written kg rules predate
         rules = rules.unionByName(spec_rules, allowMissingColumns=True)

@@ -1,71 +1,13 @@
-"""Turtle file sink: triple DataFrame -> per-file .ttl text.
+"""Distributed triple exports: N-Triples, N-Quads and line-delimited
+JSON-LD, each a plain text sink with one part-file per partition.
 
-Reference behavior (shacl_converter.py:945-975, rdf_converter.py:381-387):
-SHACL mode writes output/rdf/<name>_rdf.ttl + output/shacl/<name>_shacl.ttl,
-OWL mode a single <name>.ttl. Here serialization is a distributed
-``groupBy(file, graph).applyInPandas`` stage — each (file, graph) group is one
-Arrow batch serialized by the deterministic triplecore serializer, written
-executor-side so the driver never holds file content. Output naming mirrors
-the reference layout.
+The reference's per-spec Turtle layout is written by ``cli convert`` itself
+(operators.extract.convert_specs_to_turtle), where each spec is converted.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-RESULT_SCHEMA = StructType([
-    StructField("file", StringType(), False),
-    StructField("graph", StringType(), False),
-    StructField("out_path", StringType(), False),
-    StructField("triples", LongType(), False),
-])
-
-_SUBDIR = {"rdf": "rdf", "shacl": "shacl", "owl": ""}
-_SUFFIX = {"rdf": "_rdf", "shacl": "_shacl", "owl": ""}
-
-
-def _row_to_triple(rec) -> tuple:
-    from .triplecore.terms import bnode, iri, typed_literal
-
-    s = bnode(rec.s[2:]) if rec.s.startswith("_:") else iri(rec.s)
-    if rec.o_kind == "iri":
-        o = iri(rec.o)
-    elif rec.o_kind == "bnode":
-        o = bnode(rec.o[2:] if rec.o.startswith("_:") else rec.o)
-    else:
-        o = typed_literal(rec.o, rec.o_datatype or "http://www.w3.org/2001/XMLSchema#string")
-    return s, iri(rec.p), o
-
-
-def write_turtle(triples: DataFrame, output_dir: str) -> DataFrame:
-    """Serialize each (file, graph) partition to Turtle under output_dir.
-
-    Returns a small result DataFrame (file, graph, out_path, triples) — the
-    action that drives the job; callers typically ``.collect()`` it as the
-    run summary (reference main.py:79-86 ✓/✗ report).
-    """
-    from .triplecore.turtle import serialize_turtle
-
-    def serialize(pdf):
-        import pandas as pd
-
-        fname, gname = pdf["file"].iloc[0], pdf["graph"].iloc[0]
-        stem = fname.rsplit(".", 1)[0].replace("-", "_")
-        sub = _SUBDIR.get(gname, gname)
-        out_dir = os.path.join(output_dir, sub) if sub else output_dir
-        os.makedirs(out_dir, exist_ok=True)
-        out_path = os.path.join(out_dir, f"{stem}{_SUFFIX.get(gname, '')}.ttl")
-        triples = {_row_to_triple(r) for r in pdf.itertuples()}
-        with open(out_path, "w", encoding="utf-8") as fh:
-            fh.write(serialize_turtle(triples))
-        return pd.DataFrame(
-            [(fname, gname, out_path, len(triples))],
-            columns=["file", "graph", "out_path", "triples"])
-
-    return triples.groupBy("file", "graph").applyInPandas(serialize, RESULT_SCHEMA)
 
 
 def ntriples_line(s=None, p=None, o=None, o_kind=None, o_datatype=None,
@@ -75,8 +17,8 @@ def ntriples_line(s=None, p=None, o=None, o_kind=None, o_datatype=None,
     N-Triples is the line-oriented RDF syntax — no prefixes, no per-file
     state — which makes it the 100 TB graph export: serialization is a
     codegen projection and the write is a plain distributed text sink, vs
-    Turtle's per-(file, graph) applyInPandas grouping (write_turtle), which
-    exists for byte-parity with the reference layout, not for scale.
+    the per-spec Turtle files ``cli convert`` writes, which exist for
+    byte-parity with the reference layout, not for scale.
 
     Literal escaping follows the N-Triples grammar (backslash first, then
     quote/LF/CR/TAB); xsd:string literals are emitted plain (the parser maps

@@ -2,9 +2,10 @@
 
 Mirrors the reference CLI's input handling (main.py:19-47): file-or-recursive-
 directory expansion, *.yaml filter, order-preserving dedup — expressed as a
-driver-side listing feeding ``spark.createDataFrame`` so the (tiny) path table
-partitions across executors; file CONTENT is read executor-side inside the
-conversion stage, keeping the driver out of the data path at 100 TB scale.
+driver-side listing. ``spec_paths_df`` feeds it to ``spark.createDataFrame``
+so the path table partitions across executors; ``pack_by_size`` instead
+balances it onto a fixed task count for ``cli convert``. File CONTENT is read
+executor-side either way, keeping the driver out of the data path.
 """
 
 from __future__ import annotations
@@ -34,12 +35,41 @@ def expand_yaml_paths(inputs: list[str]) -> list[str]:
     return list(dict.fromkeys(out))
 
 
-def spec_paths_df(spark: SparkSession, inputs: list[str],
-                  parallelism: int | None = None) -> DataFrame:
+def pack_by_size(paths: list[str], n: int, key=None) -> list[list[str]]:
+    """Spread files over at most ``n`` groups by size, largest first, each
+    onto the currently lightest group (ties: fewer files, then lower index).
+    Paths with equal ``key(path)`` form one unit that stays in one group, in
+    input order. Returns ``min(n, #units)`` groups, none empty; the heaviest
+    carries at most ``total / n`` plus the largest unit. An unstattable file
+    counts as empty; its read error surfaces where it is converted."""
+    import heapq
+    import os
+
+    def size(p: str) -> int:
+        try:
+            return os.path.getsize(p)
+        except OSError:
+            return 0
+
+    units: dict[str, list[str]] = {}
+    for p in paths:
+        units.setdefault(key(p) if key else p, []).append(p)
+    n = min(n, len(units))
+    groups: list[list[str]] = [[] for _ in range(n)]
+    heap = [(0, 0, i) for i in range(n)]
+    for sz, unit in sorted(((sum(map(size, u)), u) for u in units.values()),
+                           key=lambda t: -t[0]):
+        load, count, i = heapq.heappop(heap)
+        groups[i].extend(unit)
+        heapq.heappush(heap, (load + sz, count + len(unit), i))
+    return groups
+
+
+def spec_paths_df(spark: SparkSession, inputs: list[str]) -> DataFrame:
     paths = expand_yaml_paths(inputs)
     if not paths:
         raise ValueError("No YAML files found to process.")
-    num = parallelism or min(len(paths), spark.sparkContext.defaultParallelism)
+    num = min(len(paths), spark.sparkContext.defaultParallelism)
     return spark.createDataFrame([(p,) for p in paths], PATHS_SCHEMA).repartition(num)
 
 

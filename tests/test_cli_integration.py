@@ -78,6 +78,48 @@ components:
     assert "datatypeMismatch" in viol_line
 
 
+def test_cli_kg_spec_converts_each_spec_once(spark, tmp_path, monkeypatch,
+                                             capsys):
+    """`kg --spec` converts each spec file exactly once: the fingerprint
+    collect and the violations stage read materialized rules instead of
+    re-running the conversion in Python workers."""
+    from openapi_to_rdf_spark.cli import main
+
+    trace = tmp_path / "trace"
+    trace.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_CONVERT_TRACE", str(trace))
+    specs = tmp_path / "specs"
+    specs.mkdir()
+    (specs / "vocab.yaml").write_text("""
+openapi: 3.0.1
+components:
+  schemas:
+    AlarmRecord:
+      type: object
+      properties:
+        surfaceForm:
+          type: string
+          format: date-time
+""")
+    (specs / "cells.yaml").write_text("""
+openapi: 3.0.1
+components:
+  schemas:
+    CellRecord:
+      type: object
+      properties:
+        cellId:
+          type: integer
+""")
+    rc = main(["kg", "--workdir", str(tmp_path / "wd"), "--n-convs", "20",
+               "--seed", "5", "--spec", str(specs)])
+    assert rc == 0
+    assert "violations" in capsys.readouterr().out
+    traced = sorted(line for f in trace.glob("*.log")
+                    for line in f.read_text().splitlines())
+    assert traced == ["cells.yaml", "vocab.yaml"]
+
+
 def test_cli_kg_registry_flag(spark, tmp_path, capsys):
     """`kg --registry`: the links stage runs from the CLI against a parquet
     authority table and reports linksTo/linkScore counts."""

@@ -6,7 +6,23 @@ import sys
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
-from openapi_to_rdf_spark.sinks import _row_to_triple, write_ntriples  # noqa: E402
+from openapi_to_rdf_spark.sinks import write_ntriples  # noqa: E402
+from openapi_to_rdf_spark.triplecore.terms import (  # noqa: E402
+    bnode, iri, typed_literal,
+)
+
+
+def _row_to_triple(rec) -> tuple:
+    """A triple-table row as the parser's term tuple."""
+    s = bnode(rec.s[2:]) if rec.s.startswith("_:") else iri(rec.s)
+    if rec.o_kind == "iri":
+        o = iri(rec.o)
+    elif rec.o_kind == "bnode":
+        o = bnode(rec.o[2:] if rec.o.startswith("_:") else rec.o)
+    else:
+        o = typed_literal(rec.o, rec.o_datatype
+                          or "http://www.w3.org/2001/XMLSchema#string")
+    return s, iri(rec.p), o
 
 
 def _read_parts(path):

@@ -49,19 +49,19 @@ def test_materialize_skips_committed_stage(spark, tmp_path):
 
 def test_turtle_sink_roundtrip(spark, tmp_path):
     from openapi_to_rdf_spark.convert.shacl import convert_shacl
-    from openapi_to_rdf_spark.operators.extract import convert_specs_df
-    from openapi_to_rdf_spark.sinks import write_turtle
+    from openapi_to_rdf_spark.operators.extract import (
+        convert_specs_to_turtle, turtle_path,
+    )
     from openapi_to_rdf_spark.triplecore.turtle import parse_turtle
     from openapi_to_rdf_spark.triplecore.canon import canonicalize_bnodes
 
     src = pathlib.Path("/root/reference/assets/MnS-Rel-19-OpenAPI/OpenAPI/TS28623_GenericNrm.yaml")
-    specs = spark.createDataFrame([(src.name, src.read_text())], ["path", "content"])
-    triples = convert_specs_df(specs)
-    res = {(r.graph): r for r in write_turtle(triples, str(tmp_path / "out")).collect()}
-    assert set(res) == {"rdf", "shacl"}
+    out = str(tmp_path / "out")
+    [status] = convert_specs_to_turtle(spark, [str(src)], out)
+    assert status.status == "ok"
     conv = convert_shacl(src.name, src.read_text())
     for gname, expected in [("rdf", conv.rdf), ("shacl", conv.sh)]:
-        written = parse_turtle(pathlib.Path(res[gname].out_path).read_text())
+        written = parse_turtle(pathlib.Path(turtle_path(out, src.name, gname)).read_text())
         assert canonicalize_bnodes(written) == canonicalize_bnodes(expected)
 
 

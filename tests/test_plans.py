@@ -5,6 +5,7 @@ These catch silent plan regressions that row-count tests never would."""
 import pathlib
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
@@ -173,6 +174,25 @@ def test_remap_broadcasts_changed_map_no_fact_shuffle(spark):
     # exactly one non-broadcast exchange: the dedup of the remapped
     # partition (broadcast exchanges are the map shipping, not a shuffle)
     assert nodes.count("Exchange") == 1, plan
+
+
+def test_remap_broadcast_estimate_counts_utf8_bytes(spark):
+    """The broadcast-size estimate uses each id's UTF-8 byte width: for
+    non-ASCII IRIs that exceeds the character width the cap would
+    otherwise be checked against."""
+    from openapi_to_rdf_spark.operators.canonicalize import (
+        _PY_MAP_ROW_OVERHEAD, _map_broadcast_bytes,
+    )
+
+    E = "http://ericsson.com/models/3gpp/entity#"
+    pairs = [(f"{E}zelle-\u00e9\u00e8-{i}", f"{E}\u5c0f\u533a-{i}")
+             for i in range(5)]
+    changed = spark.createDataFrame(pairs, "ent string, canonical string")
+    byte_w = sum(len(a.encode()) + len(b.encode()) for a, b in pairs) / len(pairs)
+    char_w = sum(len(a) + len(b) for a, b in pairs) / len(pairs)
+    assert byte_w > char_w
+    assert _map_broadcast_bytes(changed) == pytest.approx(
+        len(pairs) * (byte_w + _PY_MAP_ROW_OVERHEAD))
 
 
 def test_remap_oversized_map_falls_back_without_broadcast_pin(spark, monkeypatch):

@@ -45,18 +45,15 @@ def test_golden_files_match_driver_parser(spark):
 
 
 def test_sink_roundtrip(spark, tmp_path):
-    """convert -> write_turtle -> read_turtle is the identity on the
+    """convert -> Turtle files -> read_turtle is the identity on the
     canonicalized triple set."""
-    from openapi_to_rdf_spark.operators.extract import convert_specs_df
-    from openapi_to_rdf_spark.sinks import write_turtle
+    from openapi_to_rdf_spark.operators.extract import convert_specs_to_turtle
     from openapi_to_rdf_spark.triplecore.canon import canonicalize_bnodes
     from openapi_to_rdf_spark.convert.shacl import convert_shacl
 
     src = pathlib.Path("/root/reference/assets/MnS-Rel-19-OpenAPI/OpenAPI/"
                        "TS28623_ComDefs.yaml")
-    specs = spark.createDataFrame([(src.name, src.read_text())],
-                                  ["path", "content"])
-    write_turtle(convert_specs_df(specs), str(tmp_path)).collect()
+    convert_specs_to_turtle(spark, [str(src)], str(tmp_path))
     conv = convert_shacl(src.name, src.read_text())
     back = read_turtle(spark, str(tmp_path / "rdf")).collect()
     assert (canonicalize_bnodes(_to_term_set(back))
