@@ -5,9 +5,10 @@ The two main subcommands (also: validate, stream, query, update):
 - ``convert`` — the reference CLI re-expressed (reference main.py:89-145):
   positional YAML files/dirs, --base-namespace, --format {shacl,owl},
   --namespace-prefix, plus Spark-era flags --parallelism and --output-dir.
-  One Spark stage: the files are packed onto --parallelism tasks by size,
-  and each task reads, converts and writes its files' Turtle in one Python
-  pass (operators.extract.convert_specs_to_turtle). Per-file ✓/✗ summary in
+  One RDD job on a bare SparkContext (no SparkSession, no SQL engine): the
+  files are packed onto --parallelism tasks by size, and each task reads,
+  converts and writes its files' Turtle in one Python pass
+  (operators.extract.convert_specs_to_turtle). Per-file ✓/✗ summary in
   input order and exit code 1 on any failure (main.py:79-86), from the
   status rows the tasks return.
 
@@ -17,8 +18,8 @@ The two main subcommands (also: validate, stream, query, update):
 
 Run as:  spark-submit --py-files openapi_to_rdf_spark.zip -m ... or
          python -m openapi_to_rdf_spark.cli <subcommand> ...
-(in local mode the module builds its own session; under spark-submit the
-existing session/conf is reused by getOrCreate).
+(in local mode the module builds its own session or context; under
+spark-submit the existing context/conf is reused by getOrCreate).
 """
 
 from __future__ import annotations
@@ -176,12 +177,12 @@ def _build_parser() -> argparse.ArgumentParser:
 
 def cmd_convert(args) -> int:
     from .operators.extract import convert_specs_to_turtle, turtle_path
-    from .session import get_spark
+    from .session import get_context
     from .sources.specs import expand_yaml_paths
 
-    spark = get_spark(app_name="openapi-to-rdf-convert", cores=args.cores)
+    sc = get_context(app_name="openapi-to-rdf-convert", cores=args.cores)
     status = convert_specs_to_turtle(
-        spark, expand_yaml_paths(args.input), args.output_dir,
+        sc, expand_yaml_paths(args.input), args.output_dir,
         base_namespace=args.base_namespace, prefix=args.namespace_prefix,
         fmt=args.format, parallelism=args.parallelism)
 

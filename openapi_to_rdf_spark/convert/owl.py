@@ -19,8 +19,6 @@ from __future__ import annotations
 
 import posixpath
 
-import yaml
-
 from ..triplecore.terms import (
     OWL_NS,
     RDF_TYPE,
@@ -34,7 +32,7 @@ from ..triplecore.terms import (
     XSD_STRING,
     literal,
 )
-from .shacl import format_name, strip_ext
+from .shacl import format_name, load_yaml, strip_ext
 
 OWL_CLASS = ("i", OWL_NS + "Class")
 OWL_DATATYPE_PROP = ("i", OWL_NS + "DatatypeProperty")
@@ -251,7 +249,7 @@ class OwlConversion:
 
 
 def convert_owl(yaml_file: str, yaml_text: str, base_namespace: str) -> OwlConversion:
-    data = yaml.safe_load(yaml_text)
+    data = load_yaml(yaml_text)
     conv = OwlConversion(yaml_file, data, base_namespace)
     conv.convert()
     return conv

@@ -634,6 +634,28 @@ def semantic_notes(spec) -> list[str]:
     return notes
 
 
+# text libyaml reads differently from the pure-Python loader: it accepts a
+# tab inside a plain scalar and a byte-order mark after the start, and reads
+# an empty node tagged "!" as '' where yaml.safe_load gives None
+_PURE_YAML_ONLY = re.compile(r"\t|.\ufeff|(?:^|[\s\[{,])!(?:$|[\s,\]}])", re.S)
+
+
+def load_yaml(text: str):
+    """``yaml.safe_load(text)``, parsed by libyaml when it is installed.
+
+    Invalid YAML is parsed again by the pure-Python loader, so the error
+    raised (and its message) is exactly the one ``yaml.safe_load`` gives.
+    Text where the two parsers differ (``_PURE_YAML_ONLY``) goes to the
+    pure-Python loader directly.
+    """
+    if not yaml.__with_libyaml__ or _PURE_YAML_ONLY.search(text):
+        return yaml.safe_load(text)
+    try:
+        return yaml.load(text, Loader=yaml.CSafeLoader)
+    except yaml.YAMLError:
+        return yaml.safe_load(text)
+
+
 def convert_shacl(yaml_file: str, yaml_text: str, base_namespace: str | None = None,
                   prefix: str = DEFAULT_PREFIX) -> ShaclConversion:
     """spec text -> conversion result with .rdf / .sh triple sets.
@@ -641,7 +663,7 @@ def convert_shacl(yaml_file: str, yaml_text: str, base_namespace: str | None = N
     Deterministic pure function of its arguments — safe to run inside
     Arrow-vectorized Spark stages.
     """
-    data = yaml.safe_load(yaml_text)
+    data = load_yaml(yaml_text)
     if data is None:
         raise ValueError(f"YAML file is empty: {yaml_file}")
     conv = ShaclConversion(yaml_file, data, base_namespace, prefix)

@@ -5,9 +5,10 @@ Two extractors share the triple-table schema:
 1. ``convert_specs_df`` — the reference converter (convert/shacl.py pure
    function) run inside ``mapInPandas``: one Arrow batch of (path, content)
    rows in, exploded triples out. ``convert_specs_to_turtle`` is the
-   ``cli convert`` path: the same per-file conversion (``_spec_converter``),
-   but the Turtle is written where the triples are made and only one status
-   row per file leaves the worker; a failing file becomes an ``error`` row
+   ``cli convert`` path: the same per-file conversion (``_spec_converter``)
+   as one RDD job on the SparkContext, with no SQL engine or Arrow; the
+   Turtle is written where the triples are made and only one status tuple
+   per file leaves the worker; a failing file becomes an ``error`` row
    instead of aborting the job (reference main.py:56-77).
 
 2. ``extract_transcript_triples`` — the transcript triple factory
@@ -145,35 +146,38 @@ def turtle_path(output_dir: str, fname: str, graph: str) -> str:
     return os.path.join(output_dir, sub, f"{_out_stem(fname)}{suffix}.ttl")
 
 
-def convert_specs_to_turtle(spark, paths: list[str], output_dir: str,
+def convert_specs_to_turtle(sc, paths: list[str], output_dir: str,
                             base_namespace: str | None = None,
                             prefix: str | None = None, fmt: str = "shacl",
                             parallelism: int | None = None) -> list:
     """Convert spec files straight to the reference Turtle layout in ONE
-    Spark stage; returns one STATUS_SCHEMA row per path, in ``paths`` order.
+    RDD job on the SparkContext ``sc``; returns one ``Row`` per path with
+    the STATUS_SCHEMA fields, in ``paths`` order.
 
     The driver packs the files onto ``n`` groups by size (largest first) and
-    runs ``spark.range(n, numPartitions=n).mapInPandas``: one group per task,
-    JVM-only input, no shuffle. Each task reads, converts, serializes and
-    writes its files in one Python pass, so triples never cross the Python
-    boundary. Every graph of a converted file is written, an empty one as
-    a 1-byte file holding a newline (the reference serializes
-    unconditionally, shacl_converter.py:945-975). Files whose outputs share
-    a path (``a/x.yaml`` and ``b/x.yaml``, or ``TS-x.yaml`` and
-    ``TS_x.yaml``) are written by one task in input order, so the last one
-    wins as in the reference's sequential loop. Unreadable or rejected
-    specs become ``error`` rows (per-file isolation, reference
-    main.py:56-77); a failed output write fails the job.
+    runs ``sc.parallelize(range(n), n).flatMap``: one group per task, no
+    shuffle, and no SQL engine or Arrow batches, as the job does no
+    relational work. Each task reads, converts, serializes and writes its
+    files in one Python pass, so triples never leave the worker. Every graph
+    of a converted file is written, an empty one as a 1-byte file holding a
+    newline (the reference serializes unconditionally,
+    shacl_converter.py:945-975). Files whose outputs share a path
+    (``a/x.yaml`` and ``b/x.yaml``, or ``TS-x.yaml`` and ``TS_x.yaml``) are
+    written by one task in input order, so the last one wins as in the
+    reference's sequential loop. Unreadable or rejected specs become
+    ``error`` rows (per-file isolation, reference main.py:56-77); a failed
+    output write fails the job.
     """
     import os
+
+    from pyspark.sql import Row
 
     from ..sources.specs import pack_by_size
     from ..triplecore.turtle import serialize_turtle
 
     if not paths:
         raise ValueError("No YAML files found to process.")
-    groups = pack_by_size(paths,
-                          parallelism or spark.sparkContext.defaultParallelism,
+    groups = pack_by_size(paths, parallelism or sc.defaultParallelism,
                           key=lambda p: _out_stem(os.path.basename(p)))
     n = len(groups)
     convert = _spec_converter(base_namespace, prefix, fmt)
@@ -194,17 +198,11 @@ def convert_specs_to_turtle(spark, paths: list[str], output_dir: str,
         counts = [len(t) for t in graphs.values()] + [0]
         return (path, fname, "ok", None, counts[0], counts[1])
 
-    def run(iterator):
-        import pandas as pd
-
-        cols = [f.name for f in STATUS_SCHEMA.fields]
-        for batch in iterator:
-            yield pd.DataFrame([convert_file(p) for gid in batch["id"]
-                                for p in groups[gid]], columns=cols)
-
-    rows = spark.range(n, numPartitions=n).mapInPandas(run, STATUS_SCHEMA).collect()
+    status = sc.parallelize(range(n), n).flatMap(
+        lambda gid: [convert_file(p) for p in groups[gid]]).collect()
     order = {p: i for i, p in enumerate(paths)}
-    return sorted(rows, key=lambda r: order[r.path])
+    row = Row(*STATUS_SCHEMA.fieldNames())
+    return [row(*t) for t in sorted(status, key=lambda t: order[t[0]])]
 
 
 # --------------------------------------------------------------------------

@@ -174,6 +174,8 @@ def spec_inventory(specs: DataFrame) -> DataFrame:
         ArrayType, BooleanType, StringType, StructField, StructType,
     )
 
+    from ..convert.shacl import load_yaml
+
     schema = StructType([
         StructField("file", StringType(), False),
         StructField("schema_name", StringType(), False),
@@ -185,14 +187,13 @@ def spec_inventory(specs: DataFrame) -> DataFrame:
         import pathlib
 
         import pandas as pd
-        import yaml
 
         for pdf in batches:
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 fname = pathlib.Path(path).name
                 try:
-                    data = yaml.safe_load(content) or {}
+                    data = load_yaml(content) or {}
                 except Exception:
                     continue
                 schemas = (data.get("components") or {}).get("schemas") or {}

@@ -1,14 +1,20 @@
 """`cli convert` end to end on inline specs (no reference corpus needed):
 status lines, exit code, byte-exact Turtle in the reference layout, empty
-graphs, OWL mode, one conversion per file; plus the size packing that
-spreads the files over tasks."""
+graphs, OWL mode, one conversion per file, a cold process that builds no
+SparkSession; plus the size packing that spreads the files over tasks and
+the libyaml-backed YAML loader."""
 
+import json
+import os
 import pathlib
+import subprocess
 import sys
 
 import pytest
+import yaml
 
-sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
+REPO = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 NORMAL = """openapi: 3.0.1
 components:
@@ -193,3 +199,92 @@ def test_pack_by_size_balances_largest_first(tmp_path):
         assert max(loads) <= total / n + largest, (n, loads)
     # largest first: with two groups the 300-byte file sits alone
     assert [paths[9]] in pack_by_size(paths, 2)
+
+
+def test_load_yaml_matches_safe_load(tmp_path):
+    from openapi_to_rdf_spark.convert.shacl import load_yaml
+    from perfbench.gen import write_specs
+
+    def outcome(load, text):
+        try:
+            return "ok", load(text)
+        except yaml.YAMLError as e:
+            return type(e).__name__, str(e)
+
+    corpus = tmp_path / "corpus"
+    write_specs(corpus, 12, 3)
+    texts = list(SPECS.values()) + [
+        p.read_text(encoding="utf-8") for p in sorted(corpus.glob("*.yaml"))]
+    # invalid YAML, and text that libyaml alone accepts or reads otherwise
+    edge = ["a: b: c\n", "k: 'open\n", "- a\nb: c\n", "x: \x07\n",
+            "a: b\tc\n", "a:\n\t- b\n", "a: 1\n\ufeff", "a: !\n",
+            "? !\n: 1\n", "[! , a]\n", "%YAML 1.3\n--- a\n"]
+    outcomes = [(outcome(yaml.safe_load, t), outcome(load_yaml, t))
+                for t in texts + edge]
+    assert all(want == got for want, got in outcomes)
+    # TS5-invalid, the corpus's invalid file and seven of the edge texts
+    assert sum(want[0] != "ok" for want, _ in outcomes) == 9
+
+
+# a cold `cli convert` process; reports what it left behind as JSON
+_COLD_CONVERT = """
+import json, sys
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
+from openapi_to_rdf_spark.cli import main
+
+rc = main(["convert", sys.argv[1], "--output-dir", sys.argv[2], "--cores", "2"])
+print(json.dumps({
+    "rc": rc,
+    "no_session": SparkSession._instantiatedSession is None,
+    "conf": dict(SparkContext._active_spark_context.getConf().getAll()),
+}))
+"""
+
+
+@pytest.fixture(scope="module")
+def cold_convert(tmp_path_factory):
+    d = tmp_path_factory.mktemp("cold")
+    specs = d / "specs"
+    specs.mkdir()
+    for name, text in SPECS.items():
+        (specs / name).write_text(text, encoding="utf-8")
+    env = dict(os.environ,
+               PYTHONPATH=os.pathsep.join(filter(None, [
+                   str(REPO), os.environ.get("PYTHONPATH")])))
+    proc = subprocess.run(
+        [sys.executable, "-c", _COLD_CONVERT, str(specs), str(d / "out")],
+        cwd=d, env=env, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    report = json.loads(proc.stdout.splitlines()[-1])
+    return report, proc.stdout, proc.stderr
+
+
+def test_cli_convert_builds_no_spark_session(cold_convert):
+    from openapi_to_rdf_spark.convert.shacl import convert_shacl
+
+    report, out, err = cold_convert
+    assert report["rc"] == 1
+    assert report["no_session"]
+    assert [ln for ln in out.splitlines() if "✓" in ln] == [
+        f"  ✓ {n}: {len(c.rdf)} rdf + {len(c.sh)} shacl triples"
+        for n, c in ((n, convert_shacl(n, SPECS[n])) for n in GOOD)]
+    bad = [ln[ln.index("✗"):] for ln in err.splitlines() if "✗" in ln]
+    assert bad[0] == ("✗ TS4-empty.yaml: ValueError: "
+                      "YAML file is empty: TS4-empty.yaml")
+    assert bad[1].startswith("✗ TS5-invalid.yaml: ParserError: ")
+    assert len(bad) == 2
+
+
+def test_cli_convert_context_has_engine_conf(cold_convert):
+    from openapi_to_rdf_spark.session import spark_conf
+
+    conf = cold_convert[0]["conf"]
+    want = spark_conf(app_name="openapi-to-rdf-convert", cores=2)
+    assert {k: conf.get(k) for k in want} == want
+
+
+def test_get_context_reuses_running_context(spark):
+    from openapi_to_rdf_spark.session import get_context
+
+    assert get_context(app_name="other", cores=1) is spark.sparkContext

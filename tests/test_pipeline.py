@@ -57,7 +57,7 @@ def test_turtle_sink_roundtrip(spark, tmp_path):
 
     src = pathlib.Path("/root/reference/assets/MnS-Rel-19-OpenAPI/OpenAPI/TS28623_GenericNrm.yaml")
     out = str(tmp_path / "out")
-    [status] = convert_specs_to_turtle(spark, [str(src)], out)
+    [status] = convert_specs_to_turtle(spark.sparkContext, [str(src)], out)
     assert status.status == "ok"
     conv = convert_shacl(src.name, src.read_text())
     for gname, expected in [("rdf", conv.rdf), ("shacl", conv.sh)]:

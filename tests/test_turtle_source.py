@@ -53,7 +53,7 @@ def test_sink_roundtrip(spark, tmp_path):
 
     src = pathlib.Path("/root/reference/assets/MnS-Rel-19-OpenAPI/OpenAPI/"
                        "TS28623_ComDefs.yaml")
-    convert_specs_to_turtle(spark, [str(src)], str(tmp_path))
+    convert_specs_to_turtle(spark.sparkContext, [str(src)], str(tmp_path))
     conv = convert_shacl(src.name, src.read_text())
     back = read_turtle(spark, str(tmp_path / "rdf")).collect()
     assert (canonicalize_bnodes(_to_term_set(back))
